@@ -1,32 +1,39 @@
 """Per-partition checkpointing, lineage, and resume (north-rule requirement).
 
 Unit of work = ``url_hash_bucket = pmod(xxhash64(url), n_buckets)``. Each
-stage writes its output partitioned by bucket; a ``lineage`` table records
-(stage, bucket, run_config_hash, counts, wall) rows only AFTER the bucket's
-data is durably written. Resume = anti-join: buckets present in lineage with
-a matching config hash are skipped; everything else is (re)computed with
-dynamic partition overwrite, so a killed run leaves at worst orphan partition
-files that the retry overwrites — output is exactly-once per bucket.
-
-Why lineage-as-commit-log works on object storage: the parquet partition
-write and the lineage append are two steps, and the lineage append happens
-last; a bucket is "done" iff its lineage row exists. Rewriting a partition
-is idempotent (dynamic overwrite). This is the same commit discipline
-Iceberg snapshots give; we implement it directly since Iceberg jars are not
-available in this sandbox (the writer targets plain partitioned parquet; the
-layout maps 1:1 onto an Iceberg table with an identity bucket partition).
+stage writes its output partitioned by bucket (dynamic partition overwrite,
+the only Spark work ``run_stage`` adds); then the driver commits a
+``_lineage`` row per bucket and a ``_metrics`` row per stage run. A commit
+is ONE parquet file that pyarrow writes under a hidden ``.``-prefixed name
+and ``os.replace`` renames into place. A bucket is "done" iff its lineage
+row is in a visible file; Spark and pyarrow skip ``.``/``_`` files, so a
+commit that dies before its rename leaves nothing readers see. Resume =
+anti-join: buckets committed under a matching config hash are skipped, the
+rest are (re)computed and their partitions overwritten, so a killed run
+leaves at worst orphan partition files that the retry overwrites — output
+is exactly-once per bucket. Assumes a filesystem with atomic rename (local
+or POSIX-mounted; paths are ``pathlib`` paths, not object-store URLs), as
+``compact_stage`` does. This is the commit discipline of Iceberg snapshots,
+implemented directly since Iceberg jars are not available; the layout maps
+1:1 onto an Iceberg table with an identity bucket partition.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import time
 import uuid
 from collections.abc import Callable
 from pathlib import Path
 
+import pyarrow as pa
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType
 
 __all__ = ["add_bucket", "CheckpointedPipeline"]
 
@@ -48,6 +55,12 @@ METRICS_SCHEMA = (
     "stage string, run_id string, n_buckets_done int, n_rows_out long, "
     "wall_ms double, peak_mem_mb double, ts timestamp"
 )
+
+
+def _arrow_schema(ddl: str) -> pa.Schema:
+    """Arrow form of a commit-table DDL schema, by Spark's own mapping
+    (timestamp -> INT64 us UTC; Spark-written INT96 files read alike)."""
+    return to_arrow_schema(DataType.fromDDL(ddl))
 
 
 def add_bucket(df: DataFrame, n_buckets: int, key: str = "url") -> DataFrame:
@@ -101,17 +114,17 @@ class CheckpointedPipeline:
         return self.spark.read.schema(LINEAGE_SCHEMA).parquet(str(p))
 
     def completed_buckets(self, stage: str) -> set[int]:
-        rows = (
-            self.read_lineage()
-            .where(
-                (F.col("stage") == stage)
-                & (F.col("run_config_hash") == self.cfg_hash)
-            )
-            .select("url_hash_bucket")
-            .distinct()
-            .collect()
+        """Buckets of ``stage`` committed under this run config, read on
+        the driver from three lineage columns (no Spark job)."""
+        p = self._lineage_path()
+        if not os.path.isdir(p):
+            return set()
+        lineage = ds.dataset(p, schema=_arrow_schema(LINEAGE_SCHEMA))
+        mine = (ds.field("stage") == stage) & (
+            ds.field("run_config_hash") == self.cfg_hash
         )
-        return {r[0] for r in rows}
+        done = lineage.to_table(["url_hash_bucket"], filter=mine)
+        return set(done.column("url_hash_bucket").to_pylist())
 
     # ---- stage execution ----
 
@@ -135,7 +148,10 @@ class CheckpointedPipeline:
         if done:
             todo = bucketed_input.where(~F.col("url_hash_bucket").isin(*done))
         t0 = time.monotonic()
-        if todo.limit(1).isEmpty():
+        # the buckets this run commits, empty-output ones included
+        rows = todo.select("url_hash_bucket").distinct().collect()
+        todo_buckets = sorted(r[0] for r in rows)
+        if not todo_buckets:
             return self.read_stage(stage)
 
         out = fn(todo)
@@ -161,27 +177,19 @@ class CheckpointedPipeline:
         )
         wall_ms = (time.monotonic() - t0) * 1000.0
 
-        # every todo bucket is now durable, including empty-output buckets
-        todo_buckets = sorted(
-            r[0]
-            for r in todo.select("url_hash_bucket").distinct().collect()
-        )
-        # count ONLY the buckets this run wrote — partition pruning keeps the
-        # scan to the todo partitions; counting the whole stage output would
-        # re-read every previously-completed bucket on each resume.
-        # read_stage excludes captured-error rows, so n_out counts CLEAN rows
-        written = self.read_stage(stage).where(
-            F.col("url_hash_bucket").isin(*[int(b) for b in todo_buckets])
-        )
-        counts = written.groupBy("url_hash_bucket").count().collect()
-        count_map = {r["url_hash_bucket"]: r["count"] for r in counts}
-        raw_todo = None
+        # n_out from the footers of ONLY the partitions this run wrote; it
+        # counts CLEAN rows, as read_stage returns: has_error=false ones
+        clean_dir = Path(self.stage_output_path(stage))
+        if capture:
+            clean_dir = clean_dir / "has_error=false"
+        count_map = {
+            b: _count_rows(clean_dir / f"url_hash_bucket={b}")
+            for b in todo_buckets
+        }
         if capture or has_mem_col:
             raw_todo = self.spark.read.parquet(
                 self.stage_output_path(stage)
-            ).where(
-                F.col("url_hash_bucket").isin(*[int(b) for b in todo_buckets])
-            )
+            ).where(F.col("url_hash_bucket").isin(*todo_buckets))
         if capture:
             # append ONLY this run's buckets — the stage dir also holds
             # error partitions from previously-completed runs, which have
@@ -194,19 +202,14 @@ class CheckpointedPipeline:
             # partitions survive a fully-clean retry — without the
             # anti-join those phantom rows (urls that also have clean
             # output) would be appended as errors.
-            err_rows = raw_todo.where(F.col("has_error") == "true").select(
-                F.col("url").cast("string").alias("url"),
-                F.lit(stage).alias("stage"),
-                "error",
-            )
-            if "url" in written.columns:
-                clean_urls = written.select(
-                    F.col("url").cast("string").alias("url")
-                ).distinct()
-                err_rows = err_rows.join(clean_urls, "url", "left_anti")
-            err_rows.coalesce(1).write.mode("append").parquet(
-                str(self.base / "_errors")
-            )
+            url = F.col("url").cast("string").alias("url")
+            is_err = F.col("has_error") == "true"
+            clean_urls = raw_todo.where(~is_err).select(url).distinct()
+            raw_todo.where(is_err).select(
+                url, F.lit(stage).alias("stage"), "error"
+            ).join(clean_urls, "url", "left_anti").coalesce(1).write.mode(
+                "append"
+            ).parquet(str(self.base / "_errors"))
         if has_mem_col:
             # O23, in-stage: the stage's own UDF batches sampled their
             # worker's ru_maxrss into `peak_mb` (capture_metrics=True on the
@@ -216,38 +219,31 @@ class CheckpointedPipeline:
             row = raw_todo.agg(F.max("peak_mb")).first()
             peak_mem_mb = float(row[0]) if row and row[0] is not None else 0.0
         else:
-            peak_mem_mb = self._probe_peak_mem(written)
+            peak_mem_mb = self._probe_peak_mem()
         now = _now_utc()
-        lineage_rows = [
-            (
-                stage,
-                int(b),
-                self.cfg_hash,
-                self.run_id,
-                int(count_map.get(b, 0)),
-                now,
-            )
+        self._commit("_lineage", LINEAGE_SCHEMA, [
+            (stage, b, self.cfg_hash, self.run_id, count_map[b], now)
             for b in todo_buckets
-        ]
-        self.spark.createDataFrame(lineage_rows, LINEAGE_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(self._lineage_path())
-
-        metrics_rows = [
-            (
-                stage,
-                self.run_id,
-                len(todo_buckets),
-                int(sum(count_map.values())),
-                wall_ms,
-                peak_mem_mb,
-                now,
-            )
-        ]
-        self.spark.createDataFrame(metrics_rows, METRICS_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(self.base / "_metrics"))
+        ])
+        self._commit("_metrics", METRICS_SCHEMA, [(
+            stage, self.run_id, len(todo_buckets), sum(count_map.values()),
+            wall_ms, peak_mem_mb, now,
+        )])
         return self.read_stage(stage)
+
+    def _commit(self, table: str, ddl: str, rows: list[tuple]) -> None:
+        """Append ``rows`` to commit table ``table`` as one parquet file:
+        written and fsynced under a hidden ``.``-prefixed name, then
+        renamed into place, so readers see all of the rows or none."""
+        schema = _arrow_schema(ddl)
+        d = self.base / table
+        d.mkdir(parents=True, exist_ok=True)
+        tmp = d / f".part-{uuid.uuid4().hex}.parquet"
+        with open(tmp, "wb") as fh:
+            pq.write_table(pa.table(list(zip(*rows)), schema=schema), fh)
+            fh.flush()
+            os.fsync(fh.fileno())
+        os.replace(tmp, d / tmp.name[1:])
 
     def read_stage(self, stage: str) -> DataFrame:
         """Stage output, CLEAN rows only: for capture-enabled stages the
@@ -321,7 +317,7 @@ class CheckpointedPipeline:
             return self.spark.createDataFrame([], ERRORS_SCHEMA)
         return self.spark.read.parquet(str(p)).distinct()
 
-    def _probe_peak_mem(self, written: DataFrame) -> float:
+    def _probe_peak_mem(self) -> float:
         """O23 FALLBACK (LOCAL-MODE-ONLY attribution): max Python-worker
         peak RSS (MB) right after the stage ran, for stage fns that did not
         emit an in-stage ``peak_mb`` column (capture_metrics).
@@ -334,28 +330,32 @@ class CheckpointedPipeline:
         bootstrap RSS — use capture_metrics=True on the stage fn there,
         which samples ru_maxrss inside the stage's own batches (the
         preferred path; this probe is only the legacy fallback). The probe
-        scans ONLY the bucket column of the just-written partitions
-        (column-pruned parquet read, one tiny mapInPandas pass).
+        reads no data: one single-row task per core.
         """
-        probe = written.select("url_hash_bucket").mapInPandas(
+        n = self.spark.sparkContext.defaultParallelism
+        rows = self.spark.range(0, n, 1, n).mapInPandas(
             _peak_rss_batches, schema="peak_mb double"
-        )
-        row = probe.agg(F.max("peak_mb")).first()
-        return float(row[0]) if row and row[0] is not None else 0.0
+        ).collect()
+        return max((r[0] for r in rows), default=0.0)
 
 
 def _peak_rss_batches(batches):
-    """One (peak_mb) row per non-empty Arrow batch: this worker's RSS
-    high-water mark (ru_maxrss is KB on Linux)."""
+    """One (peak_mb) row per Arrow batch: this worker's RSS high-water
+    mark (ru_maxrss is KB on Linux)."""
     import resource
 
     import pandas as pd
 
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
+    for _ in batches:
         peak_kb = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss
         yield pd.DataFrame({"peak_mb": [peak_kb / 1024.0]})
+
+
+def _count_rows(part_dir: Path) -> int:
+    """Rows in a written partition dir, from its parquet footers."""
+    if not part_dir.is_dir():
+        return 0
+    return ds.dataset(str(part_dir), format="parquet").count_rows()
 
 
 def _now_utc():

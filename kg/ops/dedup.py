@@ -1129,7 +1129,8 @@ def soft_dedup_weights(
     ``clusters``: (id, cluster) assignment — e.g. minhash_near_dup's
     (doc_id, component) or cdc/simhash clusters; default is EXACT
     clusters (md5 of whitespace/case-normalized text, the exact_dedup
-    key). Docs absent from a supplied ``clusters`` are singletons.
+    key). Docs absent from a supplied ``clusters`` are singletons; an id
+    assigned to several clusters joins the least cluster key.
     Returns one row per doc (TOTAL verdict table):
     (id, cluster, cluster_size, weight) with weight = 1/cluster_size
     (one exact-BIGINT count, one float division — the hash-class-C
@@ -1146,8 +1147,13 @@ def soft_dedup_weights(
             F.col(id_col), F.md5(_norm_text()).alias(cluster_col)
         )
     else:
+        # one cluster per id: an assignment that repeats an id would fan
+        # its doc out into one row per repeat (min key: deterministic)
+        assigned = clusters.groupBy(id_col).agg(
+            F.min(cluster_col).alias(cluster_col)
+        )
         clusters = docs.select(id_col).join(
-            clusters.select(id_col, cluster_col), id_col, "left"
+            assigned, id_col, "left"
         ).select(
             id_col,
             # singleton fallback: docs outside the assignment cluster

@@ -5,9 +5,12 @@ Usage (local):
     python run_pipeline.py --pages /path/pages.parquet --out /tmp/kg_out \
         --buckets 32 [--resume] [--salted-linking]
 
-Usage (cluster):
+Usage (cluster; --out is a filesystem path with atomic rename that the
+driver and every executor mount, not an object-store URL: see
+kg/checkpoint.py):
     zip -r kg.zip kg
-    spark-submit --py-files kg.zip run_pipeline.py --pages s3://... --out s3://...
+    spark-submit --py-files kg.zip run_pipeline.py --pages s3://... \
+        --out /mnt/shared/kg_out
 
 Stages (each checkpointed per url_hash_bucket; see kg/checkpoint.py):
   extract   pages -> docs (Arrow mapInPandas, byte-identical extraction)

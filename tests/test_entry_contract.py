@@ -68,6 +68,20 @@ def test_query_matches_oracle(spark, ddb, name):
     assert not mismatches, f"{name}: first mismatches {mismatches[:5]}"
 
 
+def test_no_oracle_emits_hugeint(ddb):
+    """DuckDB types sum() over integers as HUGEINT, which pandas receives
+    as float64 while Spark's long arrives as int64: a representation split
+    the value comparison above cannot see. Oracles cast such columns to
+    BIGINT."""
+    wide = {}
+    for name, sql in sorted(ORACLES.items()):
+        cols = ddb.execute(f"DESCRIBE {sql}").fetchall()
+        bad = [c for c, typ, *_ in cols if typ in ("HUGEINT", "UHUGEINT")]
+        if bad:
+            wide[name] = bad
+    assert not wide, f"HUGEINT/UHUGEINT oracle columns: {wide}"
+
+
 def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     rows = df.collect()

@@ -65,6 +65,8 @@ def test_extract_capture_passthrough(spark):
 
 
 def test_pipeline_routes_captured_errors_to_errors_table(spark, poisoned_docs, tmp_path):
+    from pyspark.sql import functions as F
+
     from kg.checkpoint import CheckpointedPipeline, add_bucket
 
     base = str(tmp_path / "pipe")
@@ -86,6 +88,16 @@ def test_pipeline_routes_captured_errors_to_errors_table(spark, poisoned_docs, t
     # lineage n_out counts clean rows only
     lineage = pipe.read_lineage().toPandas()
     assert lineage["n_out"].sum() == out.count()
+    n_out = dict(zip(lineage["url_hash_bucket"], lineage["n_out"]))
+    counts = {r["url_hash_bucket"]: r["count"]
+              for r in out.groupBy("url_hash_bucket").count().collect()}
+    assert n_out == {b: counts.get(b, 0) for b in n_out}
+    # the poisoned row sits in its bucket's files but not in its n_out
+    raw = spark.read.parquet(pipe.stage_output_path("ner"))
+    poison = raw.where("has_error = 'true'").collect()
+    assert [r["url"] for r in poison] == ["poison://1"]
+    b = poison[0]["url_hash_bucket"]
+    assert raw.where(F.col("url_hash_bucket") == b).count() == n_out[b] + 1
 
 
 def test_resume_does_not_reappend_prior_runs_errors(spark, poisoned_docs, tmp_path):

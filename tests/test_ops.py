@@ -970,6 +970,23 @@ class TestSoftDedupWeights:
         assert out[4].cluster_size == 1 and out[4].weight == 1.0
         assert out[4].cluster != out[3].cluster
 
+    def test_repeated_id_in_assignment_does_not_fan_out(self, spark):
+        from kg.ops.dedup import soft_dedup_weights
+
+        docs = spark.createDataFrame(
+            [(i, f"t{i}") for i in range(3)], "doc_id long, text string"
+        )
+        # doc 0 is assigned twice; it joins 7, the least of its keys
+        clusters = spark.createDataFrame(
+            [(0, 9), (0, 7), (1, 7), (2, 9)], "doc_id long, cluster long"
+        )
+        rows = soft_dedup_weights(docs, clusters=clusters).collect()
+        assert sorted(r.doc_id for r in rows) == [0, 1, 2]
+        out = {r.doc_id: r for r in rows}
+        assert out[0].cluster == out[1].cluster == "7"
+        assert out[0].cluster_size == 2 and out[2].cluster_size == 1
+        assert sum(r.weight for r in rows) == pytest.approx(2.0)
+
     def test_partition_invariant(self, spark, documents):
         from kg.ops.dedup import soft_dedup_weights
 
